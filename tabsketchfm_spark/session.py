@@ -12,6 +12,47 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Largest driver heap the factory asks for by default; hosts with 64 GB
+# or more get this, smaller hosts get a quarter of their memory (the
+# JVM's own default heap fraction, -XX:MaxRAMPercentage=25).
+MAX_DRIVER_MEM_MB = 16 * 1024
+CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def _cgroup_memory_max() -> int | None:
+    """The cgroup-v2 memory limit in bytes, or None when the file is
+    absent or holds ``max`` (no limit)."""
+    try:
+        with open(CGROUP_MEMORY_MAX) as f:
+            raw = f.read().strip()
+    except OSError:
+        return None
+    return int(raw) if raw.isdigit() else None
+
+
+def _host_memory_bytes() -> int | None:
+    """The smaller of physical memory and the cgroup-v2 limit."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        phys = None
+    limits = [b for b in (phys, _cgroup_memory_max()) if b and b > 0]
+    return min(limits) if limits else None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for a new session: $SPARK_GRAFT_DRIVER_MEM
+    when set, else the smaller of 16g and a quarter of the host's
+    memory, so the driver heap cannot outgrow the machine."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mb = MAX_DRIVER_MEM_MB
+    host = _host_memory_bytes()
+    if host is not None:
+        mb = min(mb, host // 4 // (1024 * 1024))
+    return f"{mb}m"
+
 
 def get_spark(
     app_name: str = "tabsketchfm_spark",
@@ -25,6 +66,11 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` defaults to the core count: at
     local scale a 200-partition shuffle is pure overhead; on a real
     cluster this knob is expected to be raised to ~2-3× total cores.
+    ``spark.driver.memory`` is $SPARK_GRAFT_DRIVER_MEM when set, else
+    the smaller of 16g and a quarter of the host's memory (physical
+    memory, capped by a cgroup-v2 ``memory.max``); see
+    ``default_driver_memory``. It only takes effect when this call
+    starts the JVM.
     """
     # Python workers (pandas UDF / mapInPandas) must be able to import
     # this package regardless of the driver's cwd: put the repo root on
@@ -62,7 +108,7 @@ def get_spark(
         # python-side error-context feature; plans are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", str(ui).lower())
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
