@@ -9,12 +9,13 @@ orders.o_custkey?" via MinHash sketches.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tabsketchfm_spark.plans import registry
 

@@ -63,11 +63,12 @@ HEADLINE = [
 ]
 
 # scale_check runs HEADLINE + these: ops with a known blowup CLASS that
-# the headline set does not cover (round-8 advice: the bucket-colliding
-# candidate set of the MLlib BRP join can approach O(q*n) on clustered
-# vectors — a 10x data step catches it)
+# the headline set does not cover. dedup_embedding_cosine is the
+# closed-form random-hyperplane LSH bucket join: on clustered vectors
+# its bucket-colliding candidate set can approach O(n^2) — a 10x data
+# step catches it
 SCALE_EXTRA = [
-    "k6_mllib_brp_ann",
+    "dedup_embedding_cosine",
 ]
 
 

@@ -6,21 +6,25 @@ Usage: python scripts/time_queries.py [sf_dir] [name_filter...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
+
+from tabsketchfm_spark.session import default_driver_memory
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )

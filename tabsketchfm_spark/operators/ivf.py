@@ -16,15 +16,9 @@ Two quantizer variants:
   No RNG, no training: the DuckDB oracle reproduces cell assignment
   and probing bit-exactly (dot products on unit vectors are
   left-to-right in both engines), so this variant is hash-checked.
-- ``ivf_kmeans_topk``: MLlib KMeans-trained centroids (seeded) — the
-  production quantizer. Training is iterative/nondeterministic across
-  engines, so this is a rows-only query; recall vs. brute force is
-  pinned by a pytest property test instead.
-
-A third variant closes the trained-vs-oracle-exact trade-off:
-operators/kmeans.py fits an integer-quantized Lloyd's whose every
-training step replays bit-exactly in DuckDB (``ivf_kmeans_exact_topk``
-— trained cells AND a hash-checked gate).
+- ``ivf_kmeans_exact_topk`` (operators/kmeans.py): TRAINED centroids
+  from an integer-quantized Lloyd's whose every training step replays
+  bit-exactly in DuckDB — balanced cells AND a hash-checked gate.
 
 Scale shape (the point of IVF at 100 TB): cell assignment is one
 narrow projection per vector against a BROADCAST centroid table (no
@@ -68,9 +62,9 @@ def _nearest_cells(units: DataFrame, cents: DataFrame, n: int) -> DataFrame:
 
 
 def _search_tail(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """The IVF-Flat search tail shared by every quantizer variant
-    (sampled, MLlib-trained, integer-exact-trained — a self-pair or
-    tie-break change must land in all three at once): equi-join
+    """The IVF-Flat search tail shared by both quantizer variants
+    (sampled and integer-exact-trained — a self-pair or tie-break
+    change must land in both at once): equi-join
     candidates to the broadcast probe list on cell id, drop
     self-pairs, rank by exact cosine. assigned: (cand_id, cu, cell);
     probes: (q_id, qu, cell)."""
@@ -178,43 +172,3 @@ ranked AS (
   FROM scored)
 SELECT q_id, rank, cand_id, round(cos, 6) AS cos FROM ranked WHERE rank <= {k}
 """
-
-
-def ivf_kmeans_topk(
-    emb: DataFrame,
-    query_ids_max: int,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF with an MLlib KMeans coarse quantizer (the production
-    variant — trained centroids balance the cells far better than
-    sampled ones). Same output schema as ivf_topk; rows-only driver
-    check (KMeans training is not SQL-reproducible), recall pinned by
-    tests/test_properties.py.
-
-    Scale shape: KMeans fits on a SAMPLE of the lake (quantizer quality
-    needs ~100x n_cells training points, not 100 TB); assignment and
-    search are the same broadcast-join plan as ivf_topk.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    units = _unit(emb, {"id": F.col(id_col)}, vec_col).persist()
-    feat = units.select("id", array_to_vector(F.col("u")).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(feat)
-    # centroids are tiny (n_cells × dim floats) — driver-side list is fine
-    cents = units.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, cu array<double>",
-    )
-    assigned = _nearest_cells(units, cents, 1).select(
-        F.col("id").alias("cand_id"), F.col("u").alias("cu"), "cell"
-    )
-    probes = _nearest_cells(
-        units.where(F.col("id") < query_ids_max), cents, n_probe
-    ).select(F.col("id").alias("q_id"), F.col("u").alias("qu"), "cell")
-    return _search_tail(assigned, probes, k)

@@ -1,15 +1,16 @@
 """Integer-exact k-means (quantized Lloyd's) and the trained-quantizer
 IVF search it enables — ORACLE-EXACT unsupervised training.
 
-The IVF module (operators/ivf.py) ships two quantizers: a deterministic
-sampled one (oracle-exact, but untrained — cell balance is whatever the
-first n_cells vectors happen to be) and MLlib KMeans (trained, but
-RNG-seeded and iterative, so rows-only). This module closes that gap
-the same way the perceptron/boost trainers closed it for supervised
-learning (operators/classifier.py, tree.py): make every quantity in
-the training loop an exact integer, and the whole fit replays
-bit-for-bit in DuckDB as chained MATERIALIZED CTEs — the
-pagerank/BPE/perceptron replay family extended to clustering.
+The IVF module (operators/ivf.py) ships a deterministic sampled
+quantizer: oracle-exact, but untrained — cell balance is whatever the
+first n_cells vectors happen to be. A trained quantizer such as MLlib
+KMeans is RNG-seeded and iterative, so it could only be rows-only.
+This module closes that gap the same way the perceptron/boost
+trainers closed it for supervised learning (operators/classifier.py,
+tree.py): make every quantity in the training loop an exact integer,
+and the whole fit replays bit-for-bit in DuckDB as chained
+MATERIALIZED CTEs — the pagerank/BPE/perceptron replay family
+extended to clustering.
 
 The trick, step by step (reference parity: the reference clusters
 embeddings with sklearn KMeans in its search-evaluation tooling;
@@ -466,8 +467,8 @@ def ivf_kmeans_exact_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-Flat search with the TRAINED integer quantizer — the
-    production-shaped variant of operators/ivf.py's ivf_kmeans_topk,
-    now oracle-exact: cell assignment/probing use the integer
+    trained-cell counterpart of operators/ivf.py's ivf_topk, and
+    oracle-exact: cell assignment/probing use the integer
     comparable, the final ranking is exact cosine on unit vectors
     (left-to-right, bit-identical cross-engine). Same output schema as
     ivf_topk: (q_id, rank, cand_id, cos)."""

@@ -1709,13 +1709,6 @@ _register(
     ),
     ivf_op.ivf_topk_oracle_sql("embeddings", 10, k=5, n_cells=16, n_probe=4),
 )
-_register(
-    "k6_ivf_kmeans_ann",
-    lambda spark, sf: ivf_op.ivf_kmeans_topk(
-        load_table(spark, sf, "embeddings"), 10, k=5, n_cells=16, n_probe=4
-    ),
-    None,  # MLlib KMeans training not SQL-reproducible; recall pinned in tests
-)
 
 # --- ORACLE-EXACT trained clustering: integer-quantized Lloyd's -------------
 
@@ -1751,8 +1744,8 @@ _register(
 _register(
     # the trained-quantizer IVF the module above unlocks: cell
     # assignment/probing on the integer comparable, final ranking by
-    # exact cosine — k6_ivf_kmeans_ann's production shape WITH the
-    # bit-exact gate MLlib's RNG denies it. Sweep-only: the family's
+    # exact cosine — a trained-cell IVF with a bit-exact gate, which an
+    # RNG-seeded quantizer could not have. Sweep-only: the family's
     # window row is cluster_kmeans_exact_embeddings (shared fit)
     "ann_ivf_kmeans_exact_topk",
     lambda spark, sf: km_op.ivf_kmeans_exact_topk(
@@ -3116,32 +3109,6 @@ _register(
         "doc_id",
         k=200,
     ),
-)
-
-
-# --- MLlib LSH scale variants (rows-only: RNG hash families) ----------------
-
-from tabsketchfm_spark.operators import mllib_lsh
-
-_register(
-    "j4_mllib_minhash_dedup",
-    lambda spark, sf: mllib_lsh.mllib_minhash_dedup(
-        load_table(spark, sf, "documents"), threshold=0.5
-    ),
-    None,
-)
-_register(
-    "k6_mllib_brp_ann",
-    lambda spark, sf: mllib_lsh.mllib_brp_ann(load_table(spark, sf, "embeddings")),
-    None,
-)
-_register(
-    # M4's MLlib face: built-in MultilayerPerceptronClassifier on
-    # hash-count vectors (seeded RNG init -> rows-only, like the
-    # other MLlib twins)
-    "m4m_mllib_mlp_length",
-    lambda spark, sf: mllib_lsh.mllib_mlp_baseline(spark, sf),
-    None,
 )
 
 

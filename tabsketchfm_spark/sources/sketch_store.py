@@ -79,10 +79,13 @@ def build_sketch_rows(
     table_name: str,
     aug_id: int = 0,
     num_perm: int = NUM_PERM,
+    caches: list | None = None,
 ) -> DataFrame:
     """Full sketch rows for one (table, aug): per-column stats (A1-A8)
     + exact-value MinHash + word MinHash for strings; column order /
-    col_idx follows the augmentation permutation."""
+    col_idx follows the augmentation permutation. ``caches`` receives
+    the profiler's persisted frames (see profile_table) for a caller
+    that materializes the rows eagerly to release."""
     from tabsketchfm_spark.operators.minhash import minhash_signatures
 
     dtypes = dict(df.dtypes)
@@ -90,7 +93,7 @@ def build_sketch_rows(
         c for c in aug_column_order(table_name, df.columns, aug_id)
         if spark_logical_type(dtypes[c]) != "other"
     ]
-    prof = profile_table(df, table_name, columns=cols)
+    prof = profile_table(df, table_name, columns=cols, caches=caches)
     mh = column_minhash_wide(df, cols, num_perm)
     str_cols = [c for c in cols if spark_logical_type(dtypes[c]) == "string"]
     out = prof.join(mh, "column_name", "left")
@@ -126,10 +129,18 @@ def build_sketch_store(
     first = True
     for name, df in tables.items():
         for aug in range(num_augs):
-            rows = build_sketch_rows(df, name, aug, num_perm)
-            rows.write.mode("overwrite" if first else "append").partitionBy(
-                "table_name"
-            ).parquet(out_path)
+            caches: list = []
+            try:
+                rows = build_sketch_rows(df, name, aug, num_perm, caches)
+                rows.write.mode("overwrite" if first else "append").partitionBy(
+                    "table_name"
+                ).parquet(out_path)
+            finally:
+                # the written rows no longer need the profiler's
+                # spread-and-persist frame; blocking=True so the release
+                # is visible to a storage probe right after the build
+                for c in caches:
+                    c.unpersist(blocking=True)
             first = False
 
 

@@ -639,16 +639,12 @@ def _partitionless_window_violations(df) -> list[str]:
     return bad
 
 
-# Building these triggers full execution (stream runs, MLlib fits,
-# driver-side training loops) — each returns a local/driver-assembled
-# result whose plan is a LocalTableScan, so there is nothing to guard
-# and no reason to pay their runtime twice per test session.
+# Building these triggers full execution (stream runs, driver-side
+# training loops) — each returns a local/driver-assembled result whose
+# plan is a LocalTableScan, so there is nothing to guard and no reason
+# to pay their runtime twice per test session.
 _PLAN_GUARD_SKIP_PREFIXES = ("stream_",)
 _PLAN_GUARD_SKIP = {
-    "j4_mllib_minhash_dedup",
-    "k6_ivf_kmeans_ann",
-    "k6_mllib_brp_ann",
-    "m4m_mllib_mlp_length",
     "m5_pretrain_curve",
     "m5f_pretrain_curve_full",
     "m6_finetune_eval",
@@ -871,19 +867,16 @@ def test_pmi_topk_uses_distributed_topk(spark, sf01):
 
 def test_rows_only_set_is_pinned():
     """Every query without an oracle is one of the DOCUMENTED
-    rows-only cases (RNG-seeded MLlib twins, the mapInPandas model and
-    media stages, the HLL approx twin). A new unoracled registration
-    must be a conscious decision, not an accidental drop."""
+    rows-only cases (the mapInPandas model and media stages, the HLL
+    approx twin). A new unoracled registration must be a conscious
+    decision, not an accidental drop."""
     from tabsketchfm_spark.plans import registry
 
     rows_only = set(registry.queries()) - set(registry.oracle_sql())
     assert rows_only == {
         "a2s_approx_distinct_lineitem",
-        "j4_mllib_minhash_dedup",
         "k1_embeddings_customer",
         "k2_merged_embeddings_customer",
-        "k6_ivf_kmeans_ann",
-        "k6_mllib_brp_ann",
         "mm_media_features",
         # the numpy model stack: inference/training outputs are not
         # SQL-expressible (M4's closed-form forward IS, and is oracled)
@@ -893,13 +886,23 @@ def test_rows_only_set_is_pinned():
         "k1t_embeddings_trained_customer",
         "k4_unionability_trained_customer",
         "m6_finetune_eval",
-        "m4m_mllib_mlp_length",  # MLlib MLP: seeded RNG init
         # trained-head pair scoring: the head forward runs on trained
         # (non-closed-form) weights; its SQL-expressible pooled-feature →
         # linear-head algebra stage is oracle-pinned separately
         # (m6h_head_scores_customer)
         "m6t_pair_scores_trained_customer",
     }
+
+
+def test_bench_names_are_registered():
+    """Every query bench.py times (HEADLINE) and scale_check.py sweeps
+    (HEADLINE + SCALE_EXTRA) must be registered — a renamed or deleted
+    query would otherwise surface only as a KeyError mid-run."""
+    import bench
+    from tabsketchfm_spark.plans import registry
+
+    missing = set(bench.HEADLINE + bench.SCALE_EXTRA) - set(registry.queries())
+    assert not missing, f"bench names not in the registry: {sorted(missing)}"
 
 
 def test_registered_queries_are_run_deterministic(spark, sf01):

@@ -101,6 +101,24 @@ def test_search_from_stored_sketches(spark, sf001, tmp_path):
     assert est_store.est_jaccard == est_direct.est_jaccard
 
 
+def test_store_build_releases_profiler_cache(spark, sf001, tmp_path):
+    """build_sketch_store writes each (table, aug) eagerly, so the
+    profiler's spread-and-persist frame must be released after the
+    write — the build leaves no NEW materialized storage blocks behind.
+    Delta-based like the pagerank release test: other tests in the
+    shared session may hold blocks of their own."""
+    from tabsketchfm_spark.sources.tables import spread
+    from tests.test_optimization_fixes import _materialized_rdd_ids
+
+    orders = load_table(spark, sf001, "orders")
+    # one row group: spread fires, so the profiler persists its input
+    assert spread(orders) is not orders
+    before = _materialized_rdd_ids(spark)
+    build_sketch_store(spark, {"orders": orders}, str(tmp_path / "store3"))
+    leaked = _materialized_rdd_ids(spark) - before
+    assert not leaked, f"materialized cache leaked by the build: rdd ids {leaked}"
+
+
 def test_content_hash_deterministic_and_sensitive(spark, sf001):
     nation = load_table(spark, sf001, "nation")
     h1 = table_content_hash(nation, nation.columns).first().table_hash
