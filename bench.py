@@ -15,7 +15,8 @@ driver collect). Timings exclude session startup, include planning.
 
 ``fingerprints`` carries each query's executed-stage fingerprint from
 the FIRST (cold-cache) timed run — stage count + shuffle read/write +
-input bytes off the Spark UI REST API. These are PLAN properties,
+input bytes of the run's Spark job group, off the Spark UI REST API
+(tabsketchfm_spark/plans/probe.py). These are PLAN properties,
 byte-identical across runs of the same code and data, so the bench
 artifact itself proves plan-identity round-over-round: a wall-time
 swing with matching fingerprints is environment drift, not a code
@@ -35,7 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from tabsketchfm_spark.plans import registry
+from tabsketchfm_spark.plans import probe, registry
 from tabsketchfm_spark.session import get_spark
 
 HEADLINE = [
@@ -77,26 +78,8 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     spark = get_spark("bench", ui=True)
-    from tabsketchfm_spark.plans import stagefp
-
-    ui_base = "http://localhost:" + spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-    app_id = spark.sparkContext.applicationId
-
     qs = registry.queries()
-    # warm up the real execution paths once, untimed: parquet vectorized
-    # reader, whole-stage-codegen compile, shuffle + hash-agg machinery,
-    # and the C2 JIT — otherwise the first timed query absorbs them all
-    # (a trivial spark.range warms none of these)
-    from pyspark.sql import functions as F
-    from tabsketchfm_spark.sources.tables import load_table
-
-    (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")))
-        .write.mode("overwrite").format("noop").save()
-    )
-    spark.catalog.clearCache()
+    probe.warm_up(spark, sf_dir)
 
     # median of 3: one run can be poisoned by a container hiccup and
     # best-of-N hides sustained slowdowns; the median is robust to a
@@ -106,10 +89,7 @@ def main() -> None:
     for name in HEADLINE:
         runs = []
         for i in range(3):
-            # settled snapshot: completion events from the previous
-            # query's runs can land in the UI store after its jobs
-            # return; a raw snapshot would misattribute them here
-            before = stagefp.stages_settled(ui_base, app_id) if i == 0 else None
+            group = probe.tag(spark, name) if i == 0 else None
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             runs.append(time.perf_counter() - t0)
@@ -117,9 +97,9 @@ def main() -> None:
                 # fingerprint the FIRST (cold-cache) run only: runs 2-3
                 # may hit blocks run 1 persisted, which legitimately
                 # changes their stage shape; run 1's stage set is the
-                # deterministic plan property. Capture is outside the
-                # timed section.
-                fingerprints[name] = stagefp.fingerprint(ui_base, app_id, before)
+                # deterministic plan property. Tagging and capture are
+                # outside the timed section.
+                fingerprints[name] = probe.fingerprint(spark, probe.untag(spark, group))
         # drop cached blocks the query persisted: leaked caches from
         # earlier queries add eviction pressure and timing variance
         spark.catalog.clearCache()

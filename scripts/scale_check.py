@@ -53,27 +53,13 @@ def main() -> None:
     names = sys.argv[3:] or HEADLINE + SCALE_EXTRA
     ratio = _sf_of(big) / _sf_of(small)
 
-    from pyspark.sql import functions as F
-
-    from tabsketchfm_spark.plans import registry
+    from tabsketchfm_spark.plans import probe, registry
     from tabsketchfm_spark.session import get_spark
-    from tabsketchfm_spark.sources.tables import load_table
 
     spark = get_spark("scale_check")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-
-    # warm the real paths (parquet scan + hash agg + shuffle + JIT)
-    for d in (small, big):
-        (
-            load_table(spark, d, "lineitem")
-            .groupBy("l_returnflag")
-            .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-    spark.catalog.clearCache()
+    probe.warm_up(spark, small, big)
 
     flagged = []
     rows = []

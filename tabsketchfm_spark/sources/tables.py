@@ -42,7 +42,9 @@ TABLE_NAMES = [
 # scans parquet. mtime is NANOSECOND-resolution (st_mtime_ns — a
 # same-size rewrite within float-seconds mtime granularity must miss;
 # round-12 ADVICE), and inserting a new key evicts superseded entries
-# for the same (app_id, path, name) so rewrites don't accumulate.
+# for the same (app_id, path, name) so rewrites don't accumulate, and
+# every entry of another application: only one SparkContext is live per
+# process, so those belong to stopped sessions.
 _TABLE_PLAN_CACHE: dict[tuple[str, str, str, int, int], DataFrame] = {}
 
 
@@ -103,7 +105,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(field, F.timestamp_micros(F.expr(f"{field} div 1000")))
     if app_id is not None:
         for k in [
-            k for k in _TABLE_PLAN_CACHE if k[:3] == key[:3] and k != key
+            k for k in _TABLE_PLAN_CACHE if k[0] != app_id or k[:3] == key[:3]
         ]:
             del _TABLE_PLAN_CACHE[k]
         _TABLE_PLAN_CACHE[key] = df

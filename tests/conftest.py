@@ -12,7 +12,8 @@ from tabsketchfm_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    # the UI serves the REST records test_probe fingerprints read
+    s = get_spark("tests", cpus=8, shuffle_partitions=8, ui=True)
     yield s
     s.stop()
 

@@ -72,6 +72,24 @@ def test_load_table_memo_misses_after_rewrite(spark, tmp_path):
     assert df2.count() == 3 and "extra" in df2.columns
 
 
+def test_load_table_memo_evicts_stopped_applications(spark, tmp_path, monkeypatch):
+    """Frames memoized under another application id belong to a stopped
+    session; inserting a key must drop them, while the live entry is
+    still served."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tabsketchfm_spark.sources import tables
+
+    dead = ("dead-app", "/nowhere/region.parquet", "region", 0, 0)
+    monkeypatch.setitem(tables._TABLE_PLAN_CACHE, dead, object())
+    sf_dir = str(tmp_path)
+    pq.write_table(pa.table({"r_regionkey": [1, 2]}), os.path.join(sf_dir, "region.parquet"))
+    df = tables.load_table(spark, sf_dir, "region")
+    assert dead not in tables._TABLE_PLAN_CACHE
+    assert tables.load_table(spark, sf_dir, "region") is df
+
+
 def _materialized_rdd_ids(spark) -> set:
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     return {i.id() for i in infos if i.numCachedPartitions() > 0}
