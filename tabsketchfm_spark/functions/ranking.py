@@ -9,15 +9,15 @@ window whenever the ordering is a total order:
 - ``ranked_topk``: when only the first k rows survive, sort-limit
   first — Spark plans ``orderBy().limit(k)`` as TakeOrderedAndProject
   (per-partition heaps, no global shuffle) — then window over the ≤k
-  surviving rows to number them.
-- ``global_rank``: when every row needs its rank, the classic
-  two-phase scheme: range-repartition on the sort key, number rows
-  within each range partition, and add per-partition offsets. The
-  offsets are computed LAZILY as a broadcast triangular self-join over
-  the ≤ num_partitions per-partition counts (off(p) = sum of counts of
-  partitions before p) — no driver collect, no Spark job at plan-build
-  time (the former counts-collect made every ranked query's BUILD
-  eagerly run its whole upstream). No partition ever holds more than
+  surviving rows to number them. Also the ranker of a frame bounded by
+  a list the driver holds (one row per candidate the caller named):
+  k = len(list) keeps every row, at a fraction of global_rank's jobs.
+- ``global_rank``: when every row of a DATA-bounded frame needs its
+  rank, the classic two-phase scheme: range-repartition on the sort
+  key, number rows within each range partition, and add per-partition
+  offsets, computed LAZILY as a broadcast triangular self-join over
+  the ≤ num_partitions per-partition counts (no driver collect, no
+  Spark job at plan-build time). No partition ever holds more than
   its range share; ties across partitions are safe because equal keys
   range-partition together.
 """

@@ -181,7 +181,7 @@ def oph_jaccard_estimate(
     """Jaccard estimate from OPH signatures: agreeing buckets over
     buckets occupied by EITHER side — the empty-bucket-aware estimator
     (identical sets score exactly 1.0 regardless of fill rate). Same
-    ranking contract as minhash_jaccard_estimate."""
+    output as minhash_jaccard_estimate."""
     # consumed twice (bucket counts + slot comparison) — persist, or the
     # full upstream sketch pass re-executes per consumer
     candidate_sigs = candidate_sigs.persist()
@@ -202,7 +202,7 @@ def oph_jaccard_estimate(
         F.col("table_name").alias("cand_table"),
         F.col("column_name").alias("cand_column"),
     ).agg(F.count(F.lit(1)).alias("nc"))
-    est = (
+    return (
         ccnt.join(common, ["cand_table", "cand_column"], "left")
         .crossJoin(F.broadcast(qn))
         .select(
@@ -216,11 +216,6 @@ def oph_jaccard_estimate(
             ).alias("est_jaccard"),
         )
     )
-    from tabsketchfm_spark.functions.ranking import global_rank
-
-    return global_rank(
-        est, [F.desc("est_jaccard"), F.asc("cand_table"), F.asc("cand_column")]
-    )
 
 
 def minhash_jaccard_estimate(
@@ -229,19 +224,28 @@ def minhash_jaccard_estimate(
     """Estimated Jaccard between one query column's signature and every
     candidate column's signature: fraction of agreeing slots.
 
-    Output: (cand_table, cand_column, est_jaccard, rank) — rank is
-    deterministic (estimate desc, then name) so top-k cuts are stable.
+    Output: (cand_table, cand_column, est_jaccard), one row per
+    candidate column, unranked (the searches rank it: ``_rank_columns``).
     """
     q = query_sigs.select(F.col("perm"), F.col("sig").alias("qsig"))
     j = candidate_sigs.join(F.broadcast(q), "perm")
-    est = (
+    return (
         j.groupBy(F.col("table_name").alias("cand_table"), F.col("column_name").alias("cand_column"))
         .agg(F.avg((F.col("sig") == F.col("qsig")).cast("double")).alias("est_jaccard"))
     )
-    from tabsketchfm_spark.functions.ranking import global_rank
 
-    return global_rank(
-        est, [F.desc("est_jaccard"), F.asc("cand_table"), F.asc("cand_column")]
+
+def _rank_columns(est: DataFrame, candidates: list[tuple[str, list[str]]]) -> DataFrame:
+    """Rank a per-candidate-column estimate (estimate desc, then name —
+    a total order, so top-k cuts are stable). The frame holds at most
+    one row per entry of the caller's candidate list, so k = that
+    list's length keeps every row (functions/ranking.py)."""
+    from tabsketchfm_spark.functions.ranking import ranked_topk
+
+    return ranked_topk(
+        est,
+        [F.desc("est_jaccard"), F.asc("cand_table"), F.asc("cand_column")],
+        sum(len(cols) for _, cols in candidates),
     )
 
 
@@ -265,7 +269,7 @@ def joinability_search(
     for t, cols in candidates:
         s = minhash_signatures(load_table(spark, sf_dir, t), t, cols, num_perm)
         cand_sigs = s if cand_sigs is None else cand_sigs.unionByName(s)
-    return minhash_jaccard_estimate(qsigs, cand_sigs)
+    return _rank_columns(minhash_jaccard_estimate(qsigs, cand_sigs), candidates)
 
 
 def joinability_search_oph(
@@ -281,11 +285,21 @@ def joinability_search_oph(
 
     qt, qc = query
     qsigs = oph_signatures(load_table(spark, sf_dir, qt), qt, [qc], num_buckets)
-    cand_sigs = oph_signatures_multi(
+    cand_sigs = _candidate_sigs(spark, sf_dir, candidates, num_buckets)
+    return _rank_columns(oph_jaccard_estimate(qsigs, cand_sigs, num_buckets), candidates)
+
+
+def _candidate_sigs(spark, sf_dir: str, candidates, num_buckets: int) -> DataFrame:
+    """The candidate side of the OPH searches: ONE aggregate over every
+    candidate table. Joinability, unionability and subset search build
+    the same plan for the same candidates, so the frame one of them
+    persisted serves the others from Spark's cache."""
+    from tabsketchfm_spark.sources.tables import load_table
+
+    return oph_signatures_multi(
         [(load_table(spark, sf_dir, t), t, cols) for t, cols in candidates],
         num_buckets,
     )
-    return oph_jaccard_estimate(qsigs, cand_sigs, num_buckets)
 
 
 def joinability_oph_oracle_sql(
@@ -296,17 +310,17 @@ def joinability_oph_oracle_sql(
     qt, qc = query
     h = h32_sql("v", "duckdb")
     cand_parts = []
-    for t, cols in candidates:
-        for c in cols:
-            vals = (
-                f"SELECT nullif(CAST({c} AS VARCHAR), '') AS v FROM {t} "
-                f"WHERE nullif(CAST({c} AS VARCHAR), '') IS NOT NULL"
-            )
-            cand_parts.append(
-                f"""SELECT '{t}' AS cand_table, '{c}' AS cand_column,
+    # a repeated (table, column) is one candidate, as in the Spark plan
+    for t, c in dict.fromkeys((t, c) for t, cols in candidates for c in cols):
+        vals = (
+            f"SELECT nullif(CAST({c} AS VARCHAR), '') AS v FROM {t} "
+            f"WHERE nullif(CAST({c} AS VARCHAR), '') IS NOT NULL"
+        )
+        cand_parts.append(
+            f"""SELECT '{t}' AS cand_table, '{c}' AS cand_column,
                     h % {num_buckets} AS bucket, min(h) AS sig
                 FROM (SELECT {h} AS h FROM ({vals}) vals) hs GROUP BY 1, 2, 3"""
-            )
+        )
     qvals = (
         f"SELECT nullif(CAST({qc} AS VARCHAR), '') AS v FROM {qt} "
         f"WHERE nullif(CAST({qc} AS VARCHAR), '') IS NOT NULL"
@@ -461,6 +475,30 @@ FROM est WHERE est_jaccard >= {threshold}
 """
 
 
+def _column_overlap(qsigs: DataFrame, csigs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Bucket overlap of OPH signatures, the front of the table
+    searches: per query column its occupied buckets (q_col, nq), and
+    per (q_col, cand_table, cand_col) the buckets both sides occupy
+    (ncommon) and those whose signatures agree (matches)."""
+    qcnt = qsigs.groupBy(F.col("column_name").alias("q_col")).agg(
+        F.count(F.lit(1)).alias("nq")
+    )
+    q = qsigs.select(F.col("column_name").alias("q_col"), "bucket", F.col("sig").alias("qsig"))
+    common = (
+        csigs.join(F.broadcast(q), "bucket")
+        .groupBy(
+            "q_col",
+            F.col("table_name").alias("cand_table"),
+            F.col("column_name").alias("cand_col"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("ncommon"),
+            F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("matches"),
+        )
+    )
+    return qcnt, common
+
+
 def unionability_search(
     spark: SparkSession,
     sf_dir: str,
@@ -485,40 +523,12 @@ def unionability_search(
     qsigs = oph_signatures(
         load_table(spark, sf_dir, query_table), query_table, query_columns, num_buckets
     ).persist()
-    csigs = None
-    for t, cols in candidates.items():
-        s = oph_signatures(load_table(spark, sf_dir, t), t, cols, num_buckets)
-        csigs = s if csigs is None else csigs.unionByName(s)
-    csigs = csigs.persist()
-
-    qcnt = qsigs.groupBy(F.col("column_name").alias("q_col")).agg(
-        F.count(F.lit(1)).alias("nq")
-    )
+    csigs = _candidate_sigs(spark, sf_dir, candidates.items(), num_buckets).persist()
+    qcnt, common = _column_overlap(qsigs, csigs)
     ccnt = csigs.groupBy(
         F.col("table_name").alias("cand_table"),
         F.col("column_name").alias("cand_col"),
     ).agg(F.count(F.lit(1)).alias("nc"))
-    common = (
-        csigs.join(
-            F.broadcast(
-                qsigs.select(
-                    F.col("column_name").alias("q_col"),
-                    "bucket",
-                    F.col("sig").alias("qsig"),
-                )
-            ),
-            "bucket",
-        )
-        .groupBy(
-            F.col("q_col"),
-            F.col("table_name").alias("cand_table"),
-            F.col("column_name").alias("cand_col"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("ncommon"),
-            F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("matches"),
-        )
-    )
     est = (
         ccnt.crossJoin(F.broadcast(qcnt))
         .join(common, ["q_col", "cand_table", "cand_col"], "left")
@@ -548,11 +558,12 @@ def unionability_search(
         F.count(F.lit(1)).alias("matched_cols"),
         F.round(F.sum(F.lit(1.0) - F.col("est")), 6).alias("score_sum"),
     )
-    from tabsketchfm_spark.functions.ranking import global_rank
+    from tabsketchfm_spark.functions.ranking import ranked_topk
 
-    return global_rank(
+    return ranked_topk(
         votes.select("cand_table", "matched_cols", "score_sum"),
         [F.desc("matched_cols"), F.asc("score_sum"), F.asc("cand_table")],
+        len(candidates),
     )
 
 
@@ -581,8 +592,7 @@ def unionability_oracle_sql(
     )
     cparts = "\nUNION ALL\n".join(
         sig_part(t, c, f"'{t}' AS cand_table, '{c}' AS cand_col")
-        for t, cols in candidates.items()
-        for c in cols
+        for t, c in dict.fromkeys((t, c) for t, cols in candidates.items() for c in cols)
     )
     return f"""
 WITH qsigs AS ({qparts}),
@@ -636,37 +646,14 @@ def subset_search(
     qsigs = oph_signatures(
         load_table(spark, sf_dir, query_table), query_table, query_columns, num_buckets
     ).persist()
-    csigs = None
-    for t, cols in candidates.items():
-        s = oph_signatures(load_table(spark, sf_dir, t), t, cols, num_buckets)
-        csigs = s if csigs is None else csigs.unionByName(s)
-
-    qcnt = qsigs.groupBy(F.col("column_name").alias("q_col")).agg(
-        F.count(F.lit(1)).alias("nq")
+    qcnt, common = _column_overlap(
+        qsigs, _candidate_sigs(spark, sf_dir, candidates.items(), num_buckets)
     )
-    matches = (
-        csigs.join(
-            F.broadcast(
-                qsigs.select(
-                    F.col("column_name").alias("q_col"),
-                    "bucket",
-                    F.col("sig").alias("qsig"),
-                )
-            ),
-            "bucket",
-        )
-        .groupBy(
-            "q_col",
-            F.col("table_name").alias("cand_table"),
-            F.col("column_name").alias("cand_col"),
-        )
-        .agg(F.count(F.when(F.col("sig") == F.col("qsig"), 1)).alias("m"))
-    )
-    cont = matches.join(F.broadcast(qcnt), "q_col").select(
+    cont = common.join(F.broadcast(qcnt), "q_col").select(
         "q_col",
         "cand_table",
         "cand_col",
-        (F.col("m") / F.col("nq").cast("double")).alias("containment"),
+        (F.col("matches") / F.col("nq").cast("double")).alias("containment"),
     )
     wf = Window.partitionBy("q_col", "cand_table").orderBy(
         F.desc("containment"), F.asc("cand_col")
@@ -677,11 +664,12 @@ def subset_search(
             "mean_containment"
         )
     )
-    from tabsketchfm_spark.functions.ranking import global_rank
+    from tabsketchfm_spark.functions.ranking import ranked_topk
 
-    return global_rank(
+    return ranked_topk(
         per_table.select("cand_table", "mean_containment"),
         [F.desc("mean_containment"), F.asc("cand_table")],
+        len(candidates),
     )
 
 
@@ -709,8 +697,7 @@ def subset_search_oracle_sql(
     )
     cparts = "\nUNION ALL\n".join(
         sig_part(t, c, f"'{t}' AS cand_table, '{c}' AS cand_col")
-        for t, cols in candidates.items()
-        for c in cols
+        for t, c in dict.fromkeys((t, c) for t, cols in candidates.items() for c in cols)
     )
     return f"""
 WITH qsigs AS ({qparts}),

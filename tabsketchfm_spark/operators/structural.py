@@ -592,16 +592,12 @@ def table_pagerank(
             for dst in nbrs:
                 m[dst] += c
         ranks_py = {t: base + damping * (m[t] / 1e12) for t in names}
-    ranks = spark.createDataFrame(
-        [(t, ranks_py[t]) for t in names], "key string, r double"
-    )
-    from tabsketchfm_spark.functions.ranking import global_rank
-
-    ranked = global_rank(ranks, [F.desc("r"), F.asc("key")])
-    return ranked.select(
-        F.col("key").alias("table_name"),
-        F.col("r").alias("pagerank"),
-        "rank",
+    # the ranks are already on the driver: number them there (rank desc,
+    # then name — a total order), no Spark ranking pass
+    order = sorted(names, key=lambda t: (-ranks_py[t], t))
+    return spark.createDataFrame(
+        [(t, ranks_py[t], i) for i, t in enumerate(order, 1)],
+        "table_name string, pagerank double, rank int",
     )
 
 

@@ -160,7 +160,8 @@ def column_vote_search(
     first = near.withColumn("fm", F.row_number().over(wf)).where(F.col("fm") == 1)
     votes = first.groupBy("cand_table").agg(
         F.count(F.lit(1)).alias("matched_cols"),
-        F.round(F.sum("dist"), 6).alias("dist_sum"),
+        # exact decimal sum: a float sum depends on the partitions' merge order
+        F.expr("round(CAST(sum(CAST(dist AS DECIMAL(38,12))) AS DOUBLE), 6)").alias("dist_sum"),
     )
     from tabsketchfm_spark.functions.ranking import global_rank
 
@@ -188,7 +189,8 @@ first AS (
                                ORDER BY dist, cand_col) AS fm
   FROM near QUALIFY fm = 1),
 votes AS (
-  SELECT cand_table, count(*) AS matched_cols, round(sum(dist), 6) AS dist_sum
+  SELECT cand_table, count(*) AS matched_cols,
+         round(CAST(sum(CAST(dist AS DECIMAL(38,12))) AS DOUBLE), 6) AS dist_sum
   FROM first GROUP BY cand_table)
 SELECT cand_table, matched_cols, dist_sum,
        CAST(row_number() OVER (ORDER BY matched_cols DESC, dist_sum, cand_table)

@@ -104,9 +104,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for field in _nano_ts_columns(path):
         df = df.withColumn(field, F.timestamp_micros(F.expr(f"{field} div 1000")))
     if app_id is not None:
-        for k in [
-            k for k in _TABLE_PLAN_CACHE if k[0] != app_id or k[:3] == key[:3]
-        ]:
+        stale = [k for k in _TABLE_PLAN_CACHE if k[0] != app_id or k[:3] == key[:3]]
+        if any(k[:3] == key[:3] and k != key for k in stale):
+            # the file was rewritten: a persisted frame over the old file
+            # canonicalizes equal to the new plan, so Spark's cache would
+            # serve its old blocks
+            spark.catalog.refreshByPath(path)
+        for k in stale:
             del _TABLE_PLAN_CACHE[k]
         _TABLE_PLAN_CACHE[key] = df
     return df

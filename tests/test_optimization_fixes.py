@@ -98,8 +98,7 @@ def _materialized_rdd_ids(spark) -> set:
 def test_pagerank_build_releases_signature_cache(spark, sf01):
     """table_pagerank's eager edge collect must unpersist the OPH
     signature frame it materialized — building the query must leave no
-    NEW materialized storage blocks behind (global_rank's persist on
-    the 8-row rank frame is lazy, so it has no blocks at build time).
+    NEW materialized storage blocks behind.
 
     DELTA-based on purpose (round-12 driver flake): in a long-lived
     shared session other tests leave localCheckpoint RDD blocks that
