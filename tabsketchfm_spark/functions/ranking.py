@@ -67,7 +67,6 @@ def global_rank(
     df: DataFrame,
     order: list[Column],
     rank_name: str = "rank",
-    num_partitions: int | None = None,
     caches: list | None = None,
 ) -> DataFrame:
     """Rank EVERY row of ``df`` by ``order`` without a single-partition
@@ -77,9 +76,9 @@ def global_rank(
     ``caches`` (a list) to receive the persisted frame — callers that
     materialize the result eagerly should unpersist it afterwards
     (lazy callers must leave it cached: the returned plan reads it)."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
     part = (
         df.repartitionByRange(num_partitions, *order)
         .withColumn("__pid", F.spark_partition_id())

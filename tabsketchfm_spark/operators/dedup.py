@@ -1719,107 +1719,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 """
 
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    node_col: str = "doc_id",
-    max_iter: int = 15,
-) -> DataFrame:
-    """Min-label propagation connected components over near-dup pairs
-    — the clustering step that turns pairwise matches into dedup
-    groups (keep one doc per cluster). Output: (node, cluster_id)
-    where cluster_id is the smallest node id in the component.
-
-    Each iteration is one equi-join + min-aggregate: label(n) =
-    min over neighbors (self-loops included) of their labels;
-    converged when no label shrinks. Rounds needed = component
-    diameter — near-dup clusters are shallow (dups of dups), so this
-    terminates in a handful of rounds.
-
-    Only nodes that appear in a pair iterate: in a dedup workload the
-    overwhelming majority of docs are isolated (no near-dup), and an
-    isolated node is trivially its own cluster — keeping those out of
-    the loop shrinks every per-round join from |corpus| to |paired
-    nodes| and they rejoin via one anti-join projection at the end.
-    Scale shape: every round shuffles on node id only (no crossJoin,
-    no driver data); labels persist round-to-round and the previous
-    round is unpersisted — at 100 TB use the star-contraction variant
-    (large-star/small-star, Kiveris et al.) to cut round count to
-    O(log n), same join shape, plus checkpointing to truncate lineage.
-    """
-    # localCheckpoint truncates the pair-generation lineage: the loop
-    # re-analyzes its plan every round, and a persisted self-referencing
-    # union (edges ∪ f(edges)) defeats cache substitution under AQE —
-    # measured as the WHOLE shingle-join pipeline re-running per round.
-    # Checkpointing materializes the (small) pair list once on the
-    # executors; every round then scans a flat LogicalRDD. Same move
-    # GraphFrames CC makes (periodic checkpoint) for iterative graph
-    # algorithms.
-    p0 = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).localCheckpoint()
-    edges = p0.unionByName(p0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    pair_nodes = edges.select("a").distinct()
-    edges = edges.unionByName(
-        pair_nodes.select(F.col("a"), F.col("a").alias("b"))
-    ).persist()
-    labels = pair_nodes.select(
-        F.col("a").alias("node"), F.col("a").alias("lbl")
-    ).persist()
-    # labels only ever shrink, so the label SUM is strictly decreasing
-    # until the fixpoint — an O(1)-output aggregate replaces a
-    # join-based changed-rows check as the convergence test
-    prev_sum = None
-    converged = False
-    for i in range(max_iter):
-        new_labels = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("lbl").alias("lbl"))
-            .select(F.col("a").alias("node"), "lbl")
-            .persist()
-        )
-        cur_sum = new_labels.agg(F.sum("lbl")).first()[0]
-        _release_frame(labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-        # lineage truncation every few rounds (the GraphFrames CC
-        # pattern): the per-round join chains the previous round's
-        # plan, and past ~15 rounds the accumulated tree makes
-        # analysis itself the bottleneck (measured: a 17-node chain at
-        # 20 rounds grew the plan STRING past 2 GB). Typical near-dup
-        # graphs converge in <5 rounds and never hit this; the
-        # checkpoint is a tiny flat frame (paired nodes only).
-        if (i + 1) % 5 == 0:
-            old = labels
-            labels = labels.localCheckpoint()
-            old.unpersist()
-    edges.unpersist()
-    if not converged:
-        # a silent exit here would return NON-MINIMAL labels for any
-        # component deeper than max_iter — fail loud instead; callers
-        # with legitimately deep graphs raise max_iter (or switch to
-        # the star-contraction variant noted above)
-        _release_frame(labels)
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds: a component's diameter exceeds the "
-            f"round budget; raise max_iter or use star contraction"
-        )
-    # isolated nodes (never in a pair) are their own cluster — no
-    # iteration needed; the paired-node set is tiny, so broadcast the
-    # anti-join side
-    isolated = nodes.select(F.col(node_col).alias("node")).join(
-        F.broadcast(labels.select("node")), "node", "left_anti"
-    )
-    return labels.unionByName(
-        isolated.select("node", F.col("node").alias("lbl"))
-    ).select(F.col("node").alias(node_col), F.col("lbl").alias("cluster_id"))
-
-
 # superseded localCheckpoints need their RDD blocks freed directly
 # (Dataset.unpersist is a no-op for checkpointed frames) — one shared
 # definition in bpe.py
@@ -1827,11 +1726,10 @@ from tabsketchfm_spark.operators.bpe import _release_checkpoint
 
 
 def _release_frame(df: DataFrame) -> None:
-    """Release a loop-state frame that may be EITHER persisted or
-    localCheckpointed (the label-prop loop truncates lineage every few
-    rounds, so both kinds flow through the same variable): unpersist
-    handles the former, _release_checkpoint the latter — each is a
-    safe no-op on the other kind."""
+    """Release a frame that may be EITHER persisted or
+    localCheckpointed: unpersist handles the former,
+    _release_checkpoint the latter — each is a safe no-op on the other
+    kind."""
     df.unpersist()
     _release_checkpoint(df)
 
@@ -1883,26 +1781,24 @@ def connected_components_star(
     id_b: str = "id_b",
     node_col: str = "doc_id",
     max_iter: int = 12,
-    stats: dict | None = None,
     dedupe_input: bool = True,
 ) -> DataFrame:
-    """Star-contraction connected components (alternating large-star /
-    small-star, Kiveris et al.) — the O(log n)-ROUND variant of
-    ``connected_components`` for deep graphs: label propagation needs
-    diameter-many rounds (a 10^6-link chain would need 10^6 shuffles),
-    star contraction halves component height every alternation. Same
-    output contract: (node, cluster_id = smallest node id in the
-    component) — the equality test pins the two implementations to
-    identical results.
+    """Connected components over near-dup pairs by star contraction
+    (alternating large-star / small-star, Kiveris et al.) — the
+    clustering step that turns pairwise matches into dedup groups.
+    Output: (node, cluster_id = smallest node id in the component).
+    O(log n) rounds: each alternation halves component height, where
+    min-label propagation would need diameter-many rounds (a
+    10^6-link chain would need 10^6 shuffles).
 
     Each round is two groupBy-min + two equi-joins over the CURRENT
     edge set (which only shrinks toward one star per component); the
-    per-round localCheckpoint keeps the plan flat (the label-prop loop
-    lesson: un-truncated iterative lineage makes ANALYSIS the
-    bottleneck) AND bounds the within-round duplicate-subtree
-    recomputation (bidir and mid each feed two consumers — chaining
-    rounds without materialization is exponential in the chain length;
-    measured 2.7s → 5.1s at stride 2). The checkpoint is LAZY
+    per-round localCheckpoint keeps the plan flat (un-truncated
+    iterative lineage makes ANALYSIS the bottleneck) AND bounds the
+    within-round duplicate-subtree recomputation (bidir and mid each
+    feed two consumers — chaining rounds without materialization is
+    exponential in the chain length; measured 2.7s → 5.1s at stride
+    2). The checkpoint is LAZY
     (eager=False): the convergence fingerprint's aggregate is the
     action that materializes it, so each round costs ONE Spark job,
     not two (guide §1 — on small loop frames the unit of cost is
@@ -1932,13 +1828,11 @@ def connected_components_star(
     # on round 1 instead of spuriously exhausting max_iter=1
     prev_fp = _fp(e)
     converged = False
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # lazy checkpoint: the _fp aggregate below is the action that
         # materializes it — one job per round instead of two
         new_e = _contract_round(e).localCheckpoint(eager=False)
         fp = _fp(new_e)
-        if stats is not None:
-            stats["rounds"] = i + 1  # measurement hook (deep-graph evidence)
         if fp == prev_fp and new_e.exceptAll(e).isEmpty():
             # same cardinality + empty difference == identical multiset
             _release_checkpoint(e)
@@ -1964,8 +1858,7 @@ def connected_components_star(
     isolated = nodes.select(F.col(node_col).alias("node")).join(
         F.broadcast(member.select("node")), "node", "left_anti"
     )
-    # e stays checkpointed: the returned frame reads it lazily (the
-    # label-prop twin leaves its final labels persisted the same way)
+    # e stays checkpointed: the returned frame reads it lazily
     return member.unionByName(
         isolated.select("node", F.col("node").alias("lbl"))
     ).select(F.col("node").alias(node_col), F.col("lbl").alias("cluster_id"))
@@ -1977,7 +1870,6 @@ def dedup_clusters(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    cc: str = "star",
     df_cap: int | None = 1000,
 ) -> DataFrame:
     """North-star dedup clustering: n-gram-Jaccard near-dup pairs →
@@ -1985,27 +1877,19 @@ def dedup_clusters(
     training pipeline keeps rows where doc_id == cluster_id (the
     canonical representative) — cluster_size > 1 marks the dups.
 
-    Default components are STAR CONTRACTION (round-7 measurement,
-    BENCH_NOTES): on synthetic 60k-node graphs star wins both shallow
-    (3.0s vs 4.6s) and deep/diameter-29 (5.5s vs 17.4s) standalone,
-    and inside this pipeline on the real near-dup graph the two are
-    within noise (±0.5s) — so the O(log n)-round variant costs nothing
-    where label prop is fine and removes the diameter-many-shuffle
-    hazard where it is not. ``cc='label'`` keeps min-label propagation
-    (connected_components) — identical output, equality-pinned."""
+    Components come from star contraction (round-7 measurement,
+    BENCH_NOTES): on synthetic 60k-node graphs it beat min-label
+    propagation both shallow (3.0s vs 4.6s) and deep/diameter-29
+    (5.5s vs 17.4s), and on the real near-dup graph the two were
+    within noise (±0.5s)."""
     from pyspark.sql import Window
 
-    if cc not in ("label", "star"):
-        raise ValueError(f"cc must be 'label' or 'star', got {cc!r}")
     pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold, df_cap)
-    if cc == "star":
-        # ngram_jaccard_pairs output is unique by construction
-        # (groupBy(id_a, id_b)): skip the input-dedup shuffle
-        labels = connected_components_star(
-            pairs, df, node_col=id_col, dedupe_input=False
-        )
-    else:
-        labels = connected_components(pairs, df, node_col=id_col)
+    # ngram_jaccard_pairs output is unique by construction
+    # (groupBy(id_a, id_b)): skip the input-dedup shuffle
+    labels = connected_components_star(
+        pairs, df, node_col=id_col, dedupe_input=False
+    )
     size_w = F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
     return labels.select(id_col, "cluster_id", size_w.alias("cluster_size"))
 
@@ -2087,7 +1971,7 @@ def dedup_clusters_incremental(
     component to its label node preserves connectivity classes, and
     the merged component's min over {old label ids, delta node ids}
     IS the global min id — the composed labels equal
-    connected_components(all_pairs) exactly. The oracle for any
+    connected_components_star(all_pairs) exactly. The oracle for any
     registered consumer is therefore the UNCHANGED full-recompute
     recursive CTE (dedup_clusters_oracle_sql).
 

@@ -28,6 +28,25 @@ from tabsketchfm_spark.functions.sqltext import sql_str_lit
 from tabsketchfm_spark.operators.melt import melt_values
 
 
+def _minhash_arrays(
+    df: DataFrame, columns: list[str] | None, num_perm: int, words: bool
+) -> DataFrame:
+    """(column_name, minhash array<bigint>): the melt → h32 → MIN
+    aggregate of every k-perm signature, one array slot per perm.
+    ``words=True`` hashes the whitespace tokens of each value."""
+    m = melt_values(df, columns)
+    if words:
+        m = m.select(
+            "column_name", F.explode(F.split(F.col("v"), r"\s+")).alias("v")
+        ).where(F.col("v") != "")
+    h = F.expr(h32_sql("v", "spark")).alias("h")
+    sigs = m.select("column_name", h).groupBy("column_name").agg(
+        *[F.expr(s) for s in minhash_agg_sql("h", num_perm)]
+    )
+    mhs = ", ".join(f"mh{i}" for i in range(num_perm))
+    return sigs.selectExpr("column_name", f"array({mhs}) AS minhash")
+
+
 def minhash_signatures(
     df: DataFrame,
     table_name: str,
@@ -40,21 +59,9 @@ def minhash_signatures(
     ``words=True`` sketches whitespace tokens of each value instead of
     whole values (SK2 — joinability on text vocabulary).
     """
-    m = melt_values(df, columns)
-    if words:
-        m = m.select(
-            "column_name", F.explode(F.split(F.col("v"), r"\s+")).alias("v")
-        ).where(F.col("v") != "")
-    h = F.expr(h32_sql("v", "spark")).alias("h")
-    sigs = m.select("column_name", h).groupBy("column_name").agg(
-        *[F.expr(s) for s in minhash_agg_sql("h", num_perm)]
-    )
-    structs = ", ".join(
-        f"named_struct('perm', {i}, 'sig', mh{i})" for i in range(num_perm)
-    )
     tn = sql_str_lit(table_name)
-    return sigs.selectExpr(
-        f"{tn} AS table_name", "column_name", f"inline(array({structs}))"
+    return _minhash_arrays(df, columns, num_perm, words).selectExpr(
+        f"{tn} AS table_name", "column_name", "posexplode(minhash) AS (perm, sig)"
     )
 
 

@@ -28,9 +28,7 @@ avoids both the Expand N× input blow-up and Percentile's
 buffer-everything OpenHashMap whose final merge lands on ONE reducer.
 Shuffle volume is bounded by Σ per-column distinct counts (not rows),
 every stage distributes across the cluster, and memory per task is
-bounded. ``approx=True`` swaps the counts-frame deciles for
-``percentile_approx`` (single pass, fixed memory) for cluster-scale
-profiling where exact interpolation is not required.
+bounded.
 
 Documented divergences from the reference (SURVEY §7.5 risk 3): '' is
 normalized to NULL before counting (data_prep.py:202-208), distinct is
@@ -65,7 +63,6 @@ def profile_table(
     df: DataFrame,
     table_name: str,
     columns: list[str] | None = None,
-    approx: bool = False,
     round_digits: int | None = None,
     caches: list | None = None,
 ) -> DataFrame:
@@ -165,11 +162,6 @@ def profile_table(
                 f"min({v}) AS {p}min",
                 f"max({v}) AS {p}max",
             ]
-            if approx:
-                pcts = ", ".join(f"CAST({x:.17e} AS DOUBLE)" for x in DECILES)
-                aggs.append(
-                    f"percentile_approx({v}, array({pcts}), 10000) AS {p}q"
-                )
             melt_structs.append(
                 f"named_struct('cid', {idx}, 'vd', {v}, "
                 f"'vs', CAST(NULL AS STRING))"
@@ -183,7 +175,7 @@ def profile_table(
     ).where("vd IS NOT NULL OR vs IS NOT NULL")
     counts = melt.groupBy("cid", "vd", "vs").agg(F.count(F.lit(1)).alias("cnt"))
     numeric_idx = [idx for _, idx, lt in metas if lt not in ("string",)]
-    if numeric_idx and not approx:
+    if numeric_idx:
         # consumed by both the distinct-count row and the decile frame
         counts = counts.persist()
         if caches is not None:
@@ -200,7 +192,7 @@ def profile_table(
     )
     one = df.agg(*[F.expr(a) for a in aggs]).crossJoin(F.broadcast(dist_row))
 
-    if numeric_idx and not approx:
+    if numeric_idx:
         # exact deciles from cumulative counts: for decile x at
         # h = x*(n-1), the bracketing sorted values are
         #   v0 = max(v where cum_prev <= floor(h))
@@ -317,16 +309,10 @@ def profile_table(
                 f"greatest((({p}sumsq / {p}n_val) - ({mean} * {mean})), "
                 f"CAST(0.0 AS DOUBLE))"
             )
-            if approx:
-                qcols = {
-                    f"q{int(x * 100)}": rnd(f"{p}q[{i}]")
-                    for i, x in enumerate(DECILES)
-                }
-            else:
-                qcols = {
-                    f"q{int(x * 100)}": rnd(f"{p}q{int(x * 100)}")
-                    for x in DECILES
-                }
+            qcols = {
+                f"q{int(x * 100)}": rnd(f"{p}q{int(x * 100)}")
+                for x in DECILES
+            }
             fields = {
                 "num_nan": p + "num_nan",
                 "distinct_cnt": p + "distinct_cnt",

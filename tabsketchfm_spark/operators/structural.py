@@ -801,13 +801,14 @@ def table_communities(
     """Catalog domain partitioning: connected components over the same
     OPH joinability graph PageRank ranks — "which tables form one
     joinable subject area?". Table names map to their sorted-order ids
-    (so the numeric min-label cluster id IS the lexicographically
-    smallest member name), then the scale-proven min-label propagation
-    operator (operators/dedup.connected_components) runs unchanged.
+    (so the numeric smallest-id cluster label IS the lexicographically
+    smallest member name), then the dedup clustering's star-contraction
+    operator (operators/dedup.connected_components_star) runs
+    unchanged.
     Output: (table_name, community, community_size)."""
     from pyspark.sql import Window
 
-    from tabsketchfm_spark.operators.dedup import connected_components
+    from tabsketchfm_spark.operators.dedup import connected_components_star
     from tabsketchfm_spark.operators.minhash import all_pairs_joinability
 
     names = sorted(tables)
@@ -829,9 +830,11 @@ def table_communities(
         m[F.col("table_b")].cast("bigint").alias("id_b"),
     )
     nodes = spark.createDataFrame([(i,) for i in range(len(names))], "doc_id bigint")
-    cc = connected_components(eid, nodes)
+    # the edge list is distinct on (table_a, table_b) and the name→id
+    # map is injective: skip star's input-dedup shuffle
+    cc = connected_components_star(eid, nodes, dedupe_input=False)
     for c in sig_caches:
-        # connected_components localCheckpointed the pair frame as its
+        # connected_components_star localCheckpointed the pair frame as its
         # first (eager) step, so the returned plan no longer references
         # the OPH signature persist — release it or every BUILD leaks a
         # materialized cache entry (round-12 ADVICE; same class as the

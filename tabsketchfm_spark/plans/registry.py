@@ -144,7 +144,7 @@ def _table_communities_oracle() -> str:
 
 _register(
     # catalog domain partitioning: connected components over the same
-    # joinability graph (min-label propagation; oracle = WITH RECURSIVE)
+    # joinability graph (star contraction; oracle = WITH RECURSIVE)
     "k3h_table_communities",
     _table_communities,
     _table_communities_oracle(),
@@ -1055,21 +1055,11 @@ _register(
     kmeans_store_autorefresh_oracle_sql("embeddings", 400, 400_000, 2),
 )
 _register(
-    # default components are STAR CONTRACTION since round 7 (measured:
-    # wins shallow AND deep standalone, within noise in-pipeline —
-    # BENCH_NOTES round-7); O(log n) rounds, diameter-independent
+    # star-contraction components (round 7 measured it faster than
+    # min-label propagation shallow AND deep, within noise in-pipeline
+    # — BENCH_NOTES); O(log n) rounds, diameter-independent
     "dedup_clusters_documents",
     lambda spark, sf: dedup.dedup_clusters(load_table(spark, sf, "documents")),
-    dedup.dedup_clusters_oracle_sql("documents"),
-)
-_register(
-    # min-label-propagation components under the SAME oracle —
-    # identical clusters (equality-pinned in test_plans); kept
-    # registered so both CC algorithms stay under the parity gate
-    "dedup_clusters_labelprop_documents",
-    lambda spark, sf: dedup.dedup_clusters(
-        load_table(spark, sf, "documents"), cc="label"
-    ),
     dedup.dedup_clusters_oracle_sql("documents"),
 )
 _CLUSTER_MEMO: dict[tuple, DataFrame] = {}

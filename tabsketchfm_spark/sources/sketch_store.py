@@ -23,8 +23,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tabsketchfm_spark.functions.hashing import NUM_PERM, h32_sql, h64_sql, minhash_agg_sql
-from tabsketchfm_spark.operators.melt import melt_values
+from tabsketchfm_spark.functions.hashing import NUM_PERM, h32_sql, h64_sql
+from tabsketchfm_spark.operators.minhash import _minhash_arrays
 from tabsketchfm_spark.operators.profile import profile_table, spark_logical_type
 
 
@@ -65,13 +65,9 @@ def column_minhash_wide(
 ) -> DataFrame:
     """(column_name, minhash array<bigint>) for the given columns —
     SK1 in store layout (one array per column)."""
-    m = melt_values(df, columns)
-    h = F.expr(h32_sql("v", "spark")).alias("h")
-    sigs = m.select("column_name", h).groupBy("column_name").agg(
-        *[F.expr(e) for e in minhash_agg_sql("h", num_perm)]
+    return _minhash_arrays(df, columns, num_perm, False).withColumnRenamed(
+        "minhash", "minhash_exact"
     )
-    mhs = ", ".join(f"mh{i}" for i in range(num_perm))
-    return sigs.selectExpr("column_name", f"array({mhs}) AS minhash_exact")
 
 
 def build_sketch_rows(
@@ -86,8 +82,6 @@ def build_sketch_rows(
     col_idx follows the augmentation permutation. ``caches`` receives
     the profiler's persisted frames (see profile_table) for a caller
     that materializes the rows eagerly to release."""
-    from tabsketchfm_spark.operators.minhash import minhash_signatures
-
     dtypes = dict(df.dtypes)
     cols = [
         c for c in aug_column_order(table_name, df.columns, aug_id)
@@ -98,14 +92,8 @@ def build_sketch_rows(
     str_cols = [c for c in cols if spark_logical_type(dtypes[c]) == "string"]
     out = prof.join(mh, "column_name", "left")
     if str_cols:
-        mw = (
-            minhash_signatures(df, table_name, str_cols, num_perm, words=True)
-            .groupBy("column_name")
-            .agg(F.array_sort(F.collect_list(F.struct("perm", "sig"))).alias("ps"))
-            .select(
-                "column_name",
-                F.expr("transform(ps, x -> x.sig)").alias("minhash_words"),
-            )
+        mw = _minhash_arrays(df, str_cols, num_perm, True).withColumnRenamed(
+            "minhash", "minhash_words"
         )
         out = out.join(mw, "column_name", "left")
     else:

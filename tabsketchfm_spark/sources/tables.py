@@ -149,7 +149,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
-def spread(df: DataFrame, target: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Raise scan parallelism when the source provides fewer splits
     than the session has cores — a single-row-group parquet file is
     UNSPLITTABLE, so every stage upstream of the first shuffle would
@@ -161,8 +161,7 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     unconditional repartition would be a catastrophic extra shuffle.
     Only safe for partition-order-free consumers (all ops here are —
     the determinism hardening guarantees it)."""
-    sc = df.sparkSession.sparkContext
-    t = target or sc.defaultParallelism
+    t = df.sparkSession.sparkContext.defaultParallelism
     if _split_count(df) < min(t, 8):
         return df.repartition(t)
     return df

@@ -55,7 +55,7 @@ def test_salted_join_shape(spark, sf01):
 
 def test_connected_components_transitive(spark):
     """a-b + b-c (no a-c edge) must land in ONE cluster labeled min."""
-    from tabsketchfm_spark.operators.dedup import connected_components
+    from tabsketchfm_spark.operators.dedup import connected_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
@@ -65,30 +65,27 @@ def test_connected_components_transitive(spark):
     )
     got = {
         r.doc_id: r.cluster_id
-        for r in connected_components(pairs, nodes).collect()
+        for r in connected_components_star(pairs, nodes).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
 
 
 def test_connected_components_raises_past_max_iter(spark):
     """A component deeper than the round budget must fail LOUD (the
-    silent-truncation contract fix): a 16-hop chain cannot converge in
-    5 rounds; with enough rounds the same chain labels to min."""
+    silent-truncation contract fix): a 16-hop chain cannot reach its
+    star fixpoint in 2 alternations. The same chain converges to min
+    labels within the default budget in
+    test_connected_components_star_matches_union_find."""
     import pytest
 
-    from tabsketchfm_spark.operators.dedup import connected_components
+    from tabsketchfm_spark.operators.dedup import connected_components_star
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(16)], "id_a bigint, id_b bigint"
     )
     nodes = spark.createDataFrame([(i,) for i in range(17)], "doc_id bigint")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, nodes, max_iter=5)
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(chain, nodes, max_iter=20).collect()
-    }
-    assert got == {i: 0 for i in range(17)}
+        connected_components_star(chain, nodes, max_iter=2)
 
 
 def test_dedup_clusters_incremental_composition(spark):
@@ -218,18 +215,44 @@ def test_dedup_clusters_incremental_random_graphs(spark):
         assert got == want, f"trial {trial}: composition != one-shot CC"
 
 
-def test_connected_components_star_matches_label_prop(spark):
-    """Star contraction (O(log n) rounds) and min-label propagation
-    must produce IDENTICAL clusters: random multi-component graphs, a
-    16-hop chain (where star needs ~log rounds, label prop needs 17 —
-    run with max_iter=12 to prove the round-count advantage), and
-    isolated nodes."""
+def _union_find_labels(edges, node_ids) -> dict:
+    """Reference components: union-find whose root is always the
+    component's smallest id (merges keep the smaller root)."""
+    parent = {n: n for n in node_ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in node_ids}
+
+
+def test_connected_components_star_matches_union_find(spark):
+    """Star contraction must label every node with its component's
+    smallest id, exactly as a driver-side union-find does: random
+    multi-component graphs with isolated nodes, and a 16-hop chain
+    (diameter-many rounds for label propagation, well inside 12
+    alternations for star)."""
     import random
 
-    from tabsketchfm_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from tabsketchfm_spark.operators.dedup import connected_components_star
+
+    def check(edges, node_ids, **kw):
+        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        nodes = spark.createDataFrame(
+            [(n,) for n in node_ids], "doc_id bigint"
+        )
+        got = {
+            r.doc_id: r.cluster_id
+            for r in connected_components_star(pairs, nodes, **kw).collect()
+        }
+        return got, _union_find_labels(edges, node_ids)
 
     for seed in (7, 23, 51):
         rng = random.Random(seed)
@@ -238,29 +261,10 @@ def test_connected_components_star_matches_label_prop(spark):
         ] + [(100, 101), (101, 102)]
         edges = [(a, b) for a, b in edges if a != b]
         node_ids = sorted({n for e in edges for n in e} | {500, 501})
-        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-        nodes = spark.createDataFrame(
-            [(n,) for n in node_ids], "doc_id bigint"
-        )
-        lbl = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(pairs, nodes, max_iter=40).collect()
-        }
-        star = {
-            r.doc_id: r.cluster_id
-            for r in connected_components_star(pairs, nodes).collect()
-        }
-        assert star == lbl, f"seed {seed}"
-    # the deep chain: star converges well inside 12 alternations
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(16)], "id_a bigint, id_b bigint"
-    )
-    cnodes = spark.createDataFrame([(i,) for i in range(17)], "doc_id bigint")
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_star(chain, cnodes, max_iter=12).collect()
-    }
-    assert got == {i: 0 for i in range(17)}
+        got, want = check(edges, node_ids)
+        assert got == want, f"seed {seed}"
+    got, want = check([(i, i + 1) for i in range(16)], range(17), max_iter=12)
+    assert got == want == {i: 0 for i in range(17)}
 
 
 def test_range_join_has_no_nested_loop(spark, sf01):
@@ -663,7 +667,6 @@ _PLAN_GUARD_SKIP = {
     "k3g_table_pagerank",
     "k3h_table_communities",
     "dedup_clusters_documents",
-    "dedup_clusters_labelprop_documents",
     "dedup_clusters_incremental_documents",
     "store_clusters_update_documents",
     "store_clusters_compact_documents",
@@ -891,6 +894,42 @@ def test_rows_only_set_is_pinned():
         # linear-head algebra stage is oracle-pinned separately
         # (m6h_head_scores_customer)
         "m6t_pair_scores_trained_customer",
+    }
+
+
+def test_shared_oracle_groups_are_pinned():
+    """Every registered name that shares its oracle string with another
+    row is one of the DOCUMENTED twins: a stream/store/batch pair of
+    one operator, the in-memory vs stored IVF-PQ serve, and the fixed
+    vs adaptive salted join. A new twin is a second code path for one
+    result and must be named here, not slip in unnoticed."""
+    from collections import defaultdict
+
+    from tabsketchfm_spark.plans import registry
+
+    by_sql: dict[str, set] = defaultdict(set)
+    for name, sql in registry.oracle_sql().items():
+        by_sql[sql].add(name)
+    shared = {frozenset(g) for g in by_sql.values() if len(g) > 1}
+    assert shared == {
+        frozenset(g)
+        for g in [
+            ("dedup_incremental_lsh_documents", "stream_dedup_incremental_documents"),
+            ("store_kmeans_update_embeddings", "stream_kmeans_minibatch_embeddings"),
+            ("ann_ivfpq_store_append", "stream_ivfpq_append_embeddings"),
+            (
+                "store_perceptron_update_documents",
+                "stream_perceptron_minibatch_documents",
+            ),
+            (
+                "store_perceptron_autorefresh_documents",
+                "stream_perceptron_autorefresh_documents",
+            ),
+            ("stream_cusum_drift_events", "w5_cusum_drift_events"),
+            ("stream_record_linkage_sink_users", "stream_record_linkage_users"),
+            ("ann_ivfpq_adc_topk", "ann_ivfpq_stored_topk"),
+            ("scale_salted_join_revenue", "scale_salted_join_adaptive"),
+        ]
     }
 
 

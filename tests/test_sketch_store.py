@@ -60,6 +60,37 @@ def test_store_roundtrip(spark, sf001, tmp_path):
     assert "region" in plan
 
 
+def test_store_word_signatures_match_oracle(spark, sf001, tmp_path):
+    """Every string column's stored word MinHash equals the DuckDB
+    word-token oracle, perm by perm — the store's minhash_words is the
+    same SK2 sketch minhash_signatures(words=True) defines."""
+    from tabsketchfm_spark.functions.hashing import NUM_PERM
+    from tabsketchfm_spark.operators.minhash import minhash_signatures_oracle_sql
+    from tests.oracle_util import run_oracle
+
+    tables = {
+        t: load_table(spark, sf001, t) for t in ("nation", "part", "documents")
+    }
+    out = str(tmp_path / "store_words")
+    build_sketch_store(spark, tables, out)
+    store = read_sketch_store(spark, out)
+    for t, df in tables.items():
+        str_cols = [c for c, d in df.dtypes if d == "string"]
+        got = {
+            r.column_name: list(r.minhash_words)
+            for r in store.where(
+                (F.col("table_name") == t) & F.col("minhash_words").isNotNull()
+            ).collect()
+        }
+        want: dict[str, list] = {c: [None] * NUM_PERM for c in str_cols}
+        oracle = run_oracle(
+            minhash_signatures_oracle_sql(t, str_cols, words=True), sf001
+        )
+        for r in oracle.itertuples():
+            want[r.column_name][r.perm] = int(r.sig)
+        assert got == want, t
+
+
 def test_search_from_stored_sketches(spark, sf001, tmp_path):
     """S8→K3: the jaccard estimate computed FROM the parquet store
     equals the estimate computed directly from the data — the store is
